@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.sql.{Date, DriverManager}
-import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Layout, Merge, Prepare, Validate}
@@ -73,8 +72,12 @@ object JdbcReplace {
   *    its own partitions. Idempotent reruns subsume the reference's
   *    per-file transaction rollback (tasks/load.py:33-55).
   *  - the `visitantes` upsert (J1) rewrites via full-outer join into a NEW
-  *    versioned directory and a pointer-file swap makes it current — readers
-  *    never observe a half-written table.
+  *    version directory, published by the shared versioned-state protocol
+  *    ([[StateDir.publish]]: atomic pointer swap, current + 2 prior
+  *    versions kept) — readers never observe a half-written table.
+  *  - `outDir` may be any Hadoop FS URI (bare local path, `file:`,
+  *    `hdfs://`, ...): every state probe goes through the path's own
+  *    filesystem.
   *  - `bitacora` is appended LAST: it is the ledger consumers audit
   *    (README.md:166-174), so a file appears there only after its data
   *    committed.
@@ -84,16 +87,15 @@ object Pipeline {
   /** One row per processed file, mirroring the reference's bitacora insert. */
   final case class RunSummary(files: Long, okRows: Long, errRows: Long)
 
-  /** S1+S3: glob scan of `report_*.txt` under `inputDir`, all columns raw
-    * strings (validation precedes casts), rows tagged with their source file
-    * (replaces the reference's per-file dispatch identity).
+  /** S3: schema-enforced read of the listed report files, all columns raw
+    * strings (validation precedes casts), rows tagged with their source
+    * file's basename (replaces the reference's per-file dispatch identity).
     */
-  def readReports(spark: SparkSession, inputDir: String): DataFrame =
+  def readReports(spark: SparkSession, files: Seq[String]): DataFrame =
     spark.read
       .option("header", "true")
-      .option("pathGlobFilter", "report_*.txt")
       .schema(Layout.rawSchema)
-      .csv(inputDir)
+      .csv(files: _*)
       .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
 
   /** S1: driver-side file listing (metadata only — never a data scan). */
@@ -299,9 +301,9 @@ object Pipeline {
       else spark.read.jdbc(m.url, "bitacora", jdbcProps(m))
         .select("nombreArchivo").distinct().collect().map(_.getString(0)).toSet
     case SinkMode.Parquet =>
-      val bitDir = Paths.get(outDir, "bitacora")
-      if (!Files.exists(bitDir)) Set.empty
-      else spark.read.parquet(bitDir.toString)
+      val bitDir = s"$outDir/bitacora"
+      if (!StateDir.exists(spark, bitDir)) Set.empty
+      else spark.read.parquet(bitDir)
         .select("nombreArchivo").distinct().collect().map(_.getString(0)).toSet
   }
 
@@ -335,6 +337,41 @@ object Pipeline {
       val r = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
       r.readLine() != null && r.readLine() == null
     } finally in.close()
+  }
+
+  /** Basename of a listed file — its `nombreArchivo` ledger key. */
+  private[graft] def baseName(path: String): String =
+    path.substring(path.lastIndexOf('/') + 1)
+
+  /** (basename, motivo) for every file whose probe threw — the SYSTEM
+    * failures [[recordSystemFailures]] takes.
+    */
+  private[graft] def systemFailures(checks: Seq[(String, Try[_])]): Seq[(String, String)] =
+    checks.collect { case (f, Failure(e)) =>
+      (baseName(f), s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
+    }
+
+  /** The per-file gate ahead of [[processBatch]], two failure classes with
+    * different fates:
+    *  - LAYOUT failure (header readable, columns wrong): deterministic →
+    *    quarantined immediately ('Fallido' ledger row, never retried; the
+    *    reference's retry ladder cannot fix a wrong header either).
+    *  - SYSTEM failure (open/read threw — ACL, truncation, upload race):
+    *    transient → retried on subsequent runs until the reference's
+    *    2-day horizon (README.md:110-115), then quarantined
+    *    ([[recordSystemFailures]]; `partial` as documented there).
+    * Returns the files that passed and the number quarantined.
+    */
+  private[graft] def gateFiles(spark: SparkSession, outDir: String, files: Seq[String],
+                               asOf: Date, sink: SinkMode, horizonDays: Int,
+                               partial: Boolean): (Seq[String], Int) = {
+    val checks = files.map(f => f -> Try(checkHeader(spark, f)))
+    val horizon = recordSystemFailures(spark, outDir, systemFailures(checks), asOf,
+      horizonDays, partial)
+    val (good, layoutBad) = checks.collect { case (f, Success(c)) => (f, c) }.partition(_._2.ok)
+    val toQuarantine = layoutBad.map(p => baseName(p._1)) ++ horizon.expired
+    quarantine(spark, outDir, toQuarantine, asOf, sink)
+    (good.map(_._1), toQuarantine.size)
   }
 
   /** Ledger rows for wrong-layout files: recorded as 'Fallido' so they never
@@ -397,10 +434,11 @@ object Pipeline {
                            partial: Boolean = false): RetryDecision = {
     import spark.implicits._
     require(horizonDays >= 1, s"horizonDays must be >= 1, got $horizonDays")
-    val dir = Paths.get(outDir, "reintentos")
+    val dir = s"$outDir/reintentos"
+    val present = StateDir.exists(spark, dir)
     val prior: Map[String, (Date, Date, Int, String)] =
-      if (!Files.exists(dir)) Map.empty
-      else spark.read.parquet(dir.toString)
+      if (!present) Map.empty
+      else spark.read.parquet(dir)
         .select("nombreArchivo", "fechaPrimerFallo", "fechaUltimoFallo",
           "intentos", "motivo")
         .collect()
@@ -435,7 +473,7 @@ object Pipeline {
         (f, first, last, n, motivo)
       }.toSeq
     val rows = merged ++ preserved
-    if (rows.nonEmpty || Files.exists(dir))
+    if (rows.nonEmpty || present)
       // EXPIRED rows stay in this rewrite: the caller quarantines them
       // AFTER this returns, and a crash in between must leave the
       // first-failure date on disk — dropping the row first would restart
@@ -445,7 +483,7 @@ object Pipeline {
       // processed and live in bitacora now).
       rows.toDF("nombreArchivo", "fechaPrimerFallo", "fechaUltimoFallo",
           "intentos", "motivo")
-        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+        .coalesce(1).write.mode("overwrite").parquet(dir)
     RetryDecision(retry.map(_._1), expired.map(_._1))
   }
 
@@ -456,90 +494,24 @@ object Pipeline {
       if (jdbcTableExists(m, "visitantes"))
         Some(spark.read.jdbc(m.url, "visitantes", jdbcProps(m)))
       else None
-    case SinkMode.Parquet =>
-      val ptr = Paths.get(outDir, "visitantes", "_CURRENT")
-      if (Files.exists(ptr))
-        Some(spark.read.parquet(Paths.get(outDir, "visitantes", Files.readString(ptr).trim).toString))
-      else None
-  }
-
-  /** Keep-last-N retention for parquet visitantes versions — the reference
-    * has explicit retention policies (README.md:139-143) and without one the
-    * pointer-swap design grows a `v%06d` directory per batch forever. Runs
-    * AFTER the pointer swap (crash-safe order: a crash mid-prune leaves only
-    * stale extra versions, re-pruned on the next batch) and never deletes
-    * the version `_CURRENT` names, whatever `keep` says.
-    *
-    * Concurrency contract: single writer, short readers. An EXTERNAL reader
-    * holding a DataFrame from a `currentVisitantes` call made K batches ago
-    * may still lazily scan a version this prune deletes and hit
-    * FileNotFoundException — keep-last-N (default 3) is the grace window, so
-    * a reader must consume its frame within N-1 subsequent batches. The
-    * in-batch path is safe unconditionally: `merged` is fully written before
-    * the swap, and the prune only touches superseded versions.
-    */
-  private[graft] def pruneVisitantesVersions(outDir: String, keep: Int): Unit = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val vdir = Paths.get(outDir, "visitantes")
-    if (!Files.isDirectory(vdir)) return
-    val ptr = vdir.resolve("_CURRENT")
-    val current = if (Files.exists(ptr)) Files.readString(ptr).trim else ""
-    val s = Files.list(vdir)
-    val versions =
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.matches("v\\d{6}")).toSeq
-        .sortBy(_.getFileName.toString)
-      finally s.close()
-    versions.dropRight(keep)
-      .filterNot(_.getFileName.toString == current)
-      .foreach { p =>
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+    case SinkMode.Parquet => StateDir.read(spark, s"$outDir/visitantes")
   }
 
   /** Full batch run. Returns per-run totals (the driver-visible contract the
     * reference exposes through bitacora).
     */
   def runBatch(spark: SparkSession, inputDir: String, outDir: String, asOf: Date,
-               sink: SinkMode = SinkMode.Parquet, keepVersions: Int = 3,
+               sink: SinkMode = SinkMode.Parquet,
                retryHorizonDays: Int = 2): RunSummary = {
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
     val done = processedFiles(spark, outDir, sink)
-    val pending = listReports(spark, inputDir).filterNot(p => done.contains(base(p)))
+    val pending = listReports(spark, inputDir).filterNot(p => done.contains(baseName(p)))
     if (pending.isEmpty) return RunSummary(0, 0, 0)
-
-    // Per-file gate, two failure classes with different fates:
-    //  - LAYOUT failure (header readable, columns wrong): deterministic →
-    //    quarantined immediately ('Fallido' ledger row, never retried; the
-    //    reference's retry ladder cannot fix a wrong header either).
-    //  - SYSTEM failure (open/read threw — ACL, truncation, upload race):
-    //    transient → retried on subsequent runs until the reference's
-    //    2-day horizon (README.md:110-115), then quarantined
-    //    ([[recordSystemFailures]]).
-    val checks = pending.map(f => f -> scala.util.Try(checkHeader(spark, f)))
-    val sysFailed = checks.collect { case (f, scala.util.Failure(e)) =>
-      (base(f), s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-    }
-    val horizon = recordSystemFailures(spark, outDir, sysFailed, asOf, retryHorizonDays)
-    val (todo0, layoutBad) = checks
-      .collect { case (f, scala.util.Success(c)) => (f, c) }
-      .partition(_._2.ok)
-    val todo = todo0.map(_._1)
-    val toQuarantine = layoutBad.map(p => base(p._1)) ++ horizon.expired
-    quarantine(spark, outDir, toQuarantine, asOf, sink)
-    if (todo.isEmpty) return RunSummary(toQuarantine.size.toLong, 0, 0)
-
-    val raw = spark.read
-      .option("header", "true")
-      .schema(Layout.rawSchema)
-      .csv(todo: _*)
-      .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
-    val s = processBatch(spark, raw, outDir, asOf,
-      expectedFiles = todo.map(base),
-      sink = sink, keepVersions = keepVersions)
-    s.copy(files = s.files + toQuarantine.size)
+    val (todo, quarantined) =
+      gateFiles(spark, outDir, pending, asOf, sink, retryHorizonDays, partial = false)
+    if (todo.isEmpty) return RunSummary(quarantined.toLong, 0, 0)
+    val s = processBatch(spark, readReports(spark, todo), outDir, asOf,
+      expectedFiles = todo.map(baseName), sink = sink)
+    s.copy(files = s.files + quarantined)
   }
 
   /** Transform + load for one batch of tagged raw rows — the shared core of
@@ -555,7 +527,7 @@ object Pipeline {
     */
   def processBatch(spark: SparkSession, raw: DataFrame, outDir: String, asOf: Date,
                    expectedFiles: Seq[String] = Seq.empty,
-                   sink: SinkMode = SinkMode.Parquet, keepVersions: Int = 3): RunSummary = {
+                   sink: SinkMode = SinkMode.Parquet): RunSummary = {
     // P16: missing columns are a hard failure; extra columns flow through.
     val layout = Validate.checkLayout(raw.drop("nombreArchivo"))
     require(layout.ok, s"layout check failed, missing columns: ${layout.missing.mkString(", ")}")
@@ -605,8 +577,8 @@ object Pipeline {
     }
 
     // visitantes: A1 delta + J1 merge, then the mode's replace protocol —
-    // versioned dir + pointer swap (+ keep-last-N GC) on parquet, staging
-    // table + RENAME swap on JDBC.
+    // next version + StateDir pointer publish (current + 2 prior kept) on
+    // parquet, staging table + RENAME swap on JDBC.
     val delta = Prepare.visitantes(prepared)
     val merged = currentVisitantes(spark, outDir, sink)
       .map(target => Merge.mergeVisitantes(target, delta, asOf))
@@ -618,13 +590,11 @@ object Pipeline {
         case JdbcReplace.Upsert => jdbcUpsertVisitantes(merged, m)
       }
       case SinkMode.Parquet =>
-        val ptr = Paths.get(outDir, "visitantes", "_CURRENT")
-        val nextVersion = f"v${(if (Files.exists(ptr)) Files.readString(ptr).trim.drop(1).toInt else 0) + 1}%06d"
-        val versionDir = Paths.get(outDir, "visitantes", nextVersion).toString
+        val vdir = s"$outDir/visitantes"
+        val next = StateDir.current(spark, vdir).getOrElse(0L) + 1
+        val versionDir = StateDir.versionPath(vdir, next)
         merged.write.mode("overwrite").parquet(versionDir)
-        Files.createDirectories(ptr.getParent)
-        Files.writeString(ptr, nextVersion)
-        pruneVisitantesVersions(outDir, keepVersions)
+        StateDir.publish(spark, vdir, next, StateDir.versions(spark, vdir, below = next))
         // SCD-2 history of the visitantes dimension (SURVEY §2.5 rollover
         // semantics, kept queryable by time): this batch's updates are the
         // merged states of the keys the batch touched, effective asOf. The
@@ -632,8 +602,7 @@ object Pipeline {
         // existing files stay byte-untouched (the Scd.applyBatchDelta write
         // path at Pipeline level; cold history never rewrites). Rebased on
         // the JUST-WRITTEN version dir, not `merged`: the lazy merge plan
-        // reads the PREVIOUS version, which the GC above may already have
-        // pruned. JDBC mode keeps the reference's Type-1 table only: an
+        // would redo the full-outer join over the previous version. JDBC mode keeps the reference's Type-1 table only: an
         // operational DB's dimension history is the warehouse's job, not
         // the OLTP sink's. This hook sits INSIDE the documented
         // pointer-swap-to-ledger-append crash window (README "Rerun
@@ -646,8 +615,7 @@ object Pipeline {
           .join(delta.select("email"), Seq("email"), "left_semi")
           .withColumn("_eff", lit(asOf))
         operators.Scd.applyBatchDeltaDirs(spark,
-          Paths.get(outDir, "visitantes_scd", "open").toString,
-          Paths.get(outDir, "visitantes_scd", "closed").toString,
+          s"$outDir/visitantes_scd/open", s"$outDir/visitantes_scd/closed",
           touched, "email", Merge.allCols.filterNot(_ == "email"), "_eff")
     }
 

@@ -196,7 +196,7 @@ object ScaleProbe {
     // named probe families; no args = everything. Unknown tags fail loudly —
     // a typo'd tag silently running NOTHING would read as "probe produced no
     // output" rather than "tag not matched".
-    val knownTags = Set("base", "cc", "d9", "pq", "r15", "r15b", "r15c", "r16a", "r16b", "r16c", "r16d", "r17", "r18", "r19", "r19s", "r20", "r20s")
+    val knownTags = Set("base", "cc", "d9", "pq", "r15", "r15b", "r15c", "r16a", "r16b", "r16c", "r16d", "r17", "r18", "r19", "r19s", "r20")
     require(args.forall(knownTags), s"unknown probe tag(s) ${args.filterNot(knownTags).mkString(", ")} — known: ${knownTags.toSeq.sorted.mkString(", ")}")
     val want: String => Boolean =
       if (args.isEmpty) _ => true else tag => args.contains(tag)
@@ -983,12 +983,7 @@ object ScaleProbe {
     //    run B: maxFilesPerTrigger = 2 → 8 bounded batches.
     // Records wall-clock per run, per-batch admitted rows, index growth;
     // `require`s admitted-set AND index-state equality.
-    // r20s is the same instrument re-run after the round-20 drain-scoped
-    // index cache (Dedup.DedupIndexCache): the bounded drain no longer
-    // re-reads the parquet index per micro-batch, so the record under the
-    // R20S label is the verdict-item-6 before/after measurement.
-    if (want("r19s") || want("r20s")) {
-      val probeTag = if (want("r20s")) "R20S" else "R19S"
+    if (want("r19s")) {
       import graft.streaming.StreamingPipeline
       val docs = Tables.documents(spark, sfDir)
         .select("doc_id", "text", "lang", "source")
@@ -1026,42 +1021,21 @@ object ScaleProbe {
           .map(r => s"b${r.get(0)}=${r.getLong(1)}").mkString(" ")
         val ids = admitted.select("doc_id").collect().map(_.getLong(0)).toSet
         val idxRows = spark.read.parquet(s"$idx/fps").count()
-        println(f"PROBE-$probeTag%s $tag%-8s files=${parts.length}%2d wall=$wall%7.1fs " +
+        println(f"PROBE-R19S $tag%-8s files=${parts.length}%2d wall=$wall%7.1fs " +
           f"admitted=${ids.size}%6d index_fps=$idxRows%6d batches: $perBatch")
         (ids, idxRows, wall, perBatch)
       }
-      println(s"PROBE-$probeTag corpus=$sfDir n_seed=$nSeed n_backlog=$nBacklog")
+      println(s"PROBE-R19S corpus=$sfDir n_seed=$nSeed n_backlog=$nBacklog")
       val (idsA, idxA, wallA, _) = drain("oneshot", None)
       val (idsB, idxB, wallB, _) = drain("bounded", Some(2))
       require(idsA == idsB,
-        s"$probeTag TRIPWIRE: bounded-batch admitted set (${idsB.size}) != one-shot " +
+        s"R19S TRIPWIRE: bounded-batch admitted set (${idsB.size}) != one-shot " +
           s"(${idsA.size}); symmetric diff ${(idsA diff idsB) ++ (idsB diff idsA)}")
       require(idxA == idxB,
-        s"$probeTag TRIPWIRE: final index fps rows differ: oneshot=$idxA bounded=$idxB")
-      println(f"PROBE-$probeTag%s EQUAL admitted=${idsA.size}%d index_fps=$idxA%d " +
+        s"R19S TRIPWIRE: final index fps rows differ: oneshot=$idxA bounded=$idxB")
+      println(f"PROBE-R19S EQUAL admitted=${idsA.size}%d index_fps=$idxA%d " +
         f"wall_oneshot=$wallA%.1fs wall_bounded=$wallB%.1fs " +
         f"overhead=${wallB / wallA}%.2fx")
-      // R20S only: the drain-scoped-cache EXPERIMENTAL arm — the identical
-      // bounded drain with graft.gate.cache=on, read against the same-host
-      // same-hour default (the §6.1l timing-noise lesson: never compare
-      // walls across rounds). This experiment is why the cache is NOT the
-      // default: the first r20s control measured cached 60.8 s vs uncached
-      // 48.4 s (cache_effect 0.80× — a pessimization; vectorized parquet
-      // scans beat row-format checkpointed-block unions). Equality is
-      // required across all three drains; walls are printed, not gated
-      // (single-shot times — a regression call needs min-of-N).
-      if (want("r20s")) {
-        sys.props("graft.gate.cache") = "on"
-        val (idsC, idxC, wallC, _) =
-          try drain("bounded_c", Some(2))
-          finally sys.props.remove("graft.gate.cache")
-        require(idsC == idsB && idxC == idxB,
-          s"R20S TRIPWIRE: cached experimental drain differs — admitted " +
-            s"${idsC.size} vs ${idsB.size}, index fps $idxC vs $idxB")
-        println(f"PROBE-R20S CONTROL wall_bounded_uncached=$wallB%.1fs " +
-          f"wall_bounded_cached=$wallC%.1fs cache_effect=${wallB / wallC}%.2fx " +
-          f"overhead_uncached=${wallB / wallA}%.2fx overhead_cached=${wallC / wallA}%.2fx")
-      }
     }
 
     // R17: the d2 weak-band (J < 0.5) LSH recall s-curve, measured against

@@ -286,35 +286,15 @@ object Dedup {
                                   textCol: String, numPerms: Int = 16, bands: Int = 8,
                                   threshold: Double = 0.5,
                                   excludeIds: Option[DataFrame] = None): DataFrame = {
-    val spark = delta.sparkSession
-    incrementalSurvivorsFrames(
-      spark.read.parquet(s"$indexDir/sets"),
-      spark.read.parquet(s"$indexDir/bands"),
-      spark.read.parquet(s"$indexDir/fps"),
-      delta, idCol, textCol, numPerms, bands, threshold, excludeIds)
-  }
-
-  /** [[incrementalSurvivorsIndexed]]'s core over index FRAMES instead of an
-    * index DIRECTORY — the gate arithmetic is identical; only where the
-    * corpus side comes from differs. Exists so the streaming gate's bounded
-    * multi-batch drain can hold the index as localCheckpointed blocks
-    * ([[DedupIndexCache]]) instead of re-reading and re-decoding the parquet
-    * index once per micro-batch — the dominant cost of the 2.12× bounded-
-    * drain overhead ScaleProbe r19s measured (round-19 verdict item 6).
-    */
-  def incrementalSurvivorsFrames(cSets0: DataFrame, cBands: DataFrame, cFps: DataFrame,
-                                 delta: DataFrame, idCol: String,
-                                 textCol: String, numPerms: Int = 16, bands: Int = 8,
-                                 threshold: Double = 0.5,
-                                 excludeIds: Option[DataFrame] = None): DataFrame = {
     require(numPerms % bands == 0, "numPerms must divide into bands")
+    val spark = delta.sparkSession
     def excl(index: DataFrame): DataFrame =
       excludeIds.fold(index)(ids => index.join(ids, Seq(idCol), "left_anti"))
-    val cSets = excl(cSets0)
+    val cSets = excl(spark.read.parquet(s"$indexDir/sets"))
     val dSets = portableSets(delta, idCol, textCol)
     val cands = portableBandSigs(dSets, idCol, numPerms, bands)
       .select(col("band"), col("sig"), col(idCol).as("d"))
-      .join(excl(cBands)
+      .join(excl(spark.read.parquet(s"$indexDir/bands"))
         .select(col("band"), col("sig"), col(idCol).as("c")), Seq("band", "sig"))
       .select("d", "c").distinct()
     val nearDrop = jaccardVerified(cands, dSets, cSets, idCol, "d", "c")
@@ -322,7 +302,7 @@ object Dedup {
       .select(col("d").as(idCol)).distinct()
     val exactDrop = delta
       .withColumn("fp", Text.fingerprint(col(textCol)))
-      .join(excl(cFps).select("fp").distinct(),
+      .join(excl(spark.read.parquet(s"$indexDir/fps")).select("fp").distinct(),
         Seq("fp"), "left_semi")
       .select(col(idCol))
     delta
@@ -330,82 +310,12 @@ object Dedup {
       .join(exactDrop, Seq(idCol), "left_anti")
   }
 
-  /** Drain-scoped in-memory view of a persisted dedup index: the three
-    * sub-indexes as localCheckpointed increments, so a bounded multi-batch
-    * streaming drain reads the parquet index ONCE and each micro-batch
-    * gates against block-manager blocks.
-    *
-    * EXPERIMENTAL ARM, not the default (round 20): round-19 verdict item 6
-    * hypothesized the bounded drain's 2.12× overhead was the per-batch
-    * parquet re-read; the r20s same-session control FALSIFIED it — the
-    * cached drain read 60.8 s vs 48.4 s uncached on the identical ×10
-    * backlog (cache_effect 0.80×, a pessimization: vectorized column-pruned
-    * parquet scans beat row-format checkpointed-block unions, the same
-    * codegen-first reasoning as the engine's no-UDF rule). Enabled only by
-    * `graft.gate.cache=on` so the probe can keep re-reading the experiment;
-    * the gate's default stays the columnar re-read, which is also the only
-    * shape that survives 100 TB (a session-pinned index does not).
-    *
-    * Consistency contract: [[admit]] mirrors every
-    * [[appendToDedupIndex]] the drain performs, so the cached view equals
-    * the on-disk index at each batch boundary. Duplicate cache entries
-    * (an at-least-once replay of a batch whose crashed attempt already
-    * appended to disk re-admits into the cache) are harmless exactly as
-    * duplicate DISK rows are — every index lookup is distinct/semi-join
-    * based, and the per-batch id exclusion keeps the gate result exact
-    * (the [[graft.streaming.StreamingPipeline.dedupGateBatch]] replay
-    * protocol). On RESTART a fresh cache re-reads the full on-disk index,
-    * which includes every committed append — nothing is lost with the
-    * process. Durability still lives on disk; the cache is a read path.
-    *
-    * Single-drain single-writer like the index itself; [[close]] releases
-    * the checkpointed blocks (the Centrality/Bpe leak class — a process
-    * that drains repeatedly must not accumulate one cached index per
-    * drain).
-    */
-  final class DedupIndexCache(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String,
-                              numPerms: Int = 16, bands: Int = 8) {
-    @volatile private var parts: List[(DataFrame, DataFrame, DataFrame)] =
-      List((spark.read.parquet(s"$indexDir/sets").localCheckpoint(),
-        spark.read.parquet(s"$indexDir/bands").localCheckpoint(),
-        spark.read.parquet(s"$indexDir/fps").localCheckpoint()))
-    private def unioned(f: ((DataFrame, DataFrame, DataFrame)) => DataFrame): DataFrame =
-      parts.map(f).reduce(_ unionByName _)
-    def sets: DataFrame = unioned(_._1)
-    def bandSigs: DataFrame = unioned(_._2)
-    def fps: DataFrame = unioned(_._3)
-    /** Mirror an [[appendToDedupIndex]] of `accepted` into the cached view.
-      * Derives the same three frames the disk append writes; each increment
-      * is its own checkpoint, so admitting never re-materializes the
-      * already-cached corpus.
-      */
-    def admit(accepted: DataFrame, idCol: String, textCol: String): Unit = {
-      val aSets = portableSets(accepted, idCol, textCol) // already a checkpoint
-      val aBands = Materialize.frame(portableBandSigs(aSets, idCol, numPerms, bands))
-      val aFps = Materialize.frame(accepted
-        .select(col(idCol), Text.fingerprint(col(textCol)).as("fp")))
-      parts = (aSets, aBands, aFps) :: parts
-    }
-    /** Idempotent: the gate's failure path, its termination listener, and
-      * its post-start isActive recheck may each call this.
-      */
-    def close(): Unit = {
-      val toDrop = parts
-      parts = Nil
-      toDrop.foreach { case (a, b, c) =>
-        Checkpoints.drop(a); Checkpoints.drop(b); Checkpoints.drop(c)
-      }
-    }
-  }
-
   /** Compact the persisted dedup index in place: appends accumulate one
     * parquet file set per admitted batch, and the streaming gate's crash
     * window (append-then-marker) tolerates — but stores — duplicate rows.
     * Compaction rewrites each sub-index exactly DISTINCT into few files,
-    * using the same rename-aside swap + entry-time crash recovery as
-    * [[PostProcess.compactParquet]] (the index stays readable at every
-    * crash point). Single-writer: serialize against gate batches.
+    * swapped in by [[graft.StateDir.swapIn]] (the index stays readable at
+    * every crash point). Single-writer: serialize against gate batches.
     * Returns (rows before, rows after) per sub-index.
     */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
@@ -413,57 +323,35 @@ object Dedup {
     Seq("sets", "bands", "fps")
       .map(sub => sub -> compactDistinctDir(spark, dir, sub, numFiles)).toMap
 
-  /** One sub-index distinct-rewrite with the rename-aside swap + entry-time
-    * crash recovery ladder (PostProcess.compactParquet's protocol): shared
-    * by [[compactDedupIndex]] and
-    * [[graft.operators.Similarity.compactSemanticIndex]]. Single-writer;
-    * the dir stays readable at every crash point. Returns (rows before,
-    * rows after).
-    */
-  /** `readPath` maps the live sub-dir to what spark.read should open (the
+  /** One sub-index distinct-rewrite, swapped in by
+    * [[graft.StateDir.swapIn]] after its entry-time [[graft.StateDir.recover]]:
+    * shared by [[compactDedupIndex]],
+    * [[graft.operators.Similarity.compactSemanticIndex]] and the media index
+    * compaction. Single-writer; the dir stays readable at every crash point.
+    * Returns (rows before, rows after).
+    *
+    * `readPath` maps the live sub-dir to what spark.read should open (the
     * media index appends a trailing glob star so base + batch subdirs are
     * read as a union); `writeSub` nests the rewritten parquet inside the
     * swap target (the media index folds everything into `base/` so the
     * post-swap glob still matches). Defaults are the flat dedup/semantic
-    * layout. ONE copy of the swap/recovery ladder serves all three indexes
-    * (round-18 review finding: a drifting second copy of a crash protocol
-    * is its own bug).
+    * layout.
     */
   private[operators] def compactDistinctDir(spark: org.apache.spark.sql.SparkSession,
                                             dir: String, sub: String,
                                             numFiles: Int,
                                             readPath: String => String = identity,
                                             writeSub: String = ""): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    // Hadoop FileSystem API (not java.nio) so an index on HDFS/S3A works for
-    // compaction the same way it does for build/gate/append. Every rename
-    // here targets a non-existent destination (the ladder deletes first), so
-    // checked FileSystem.rename is sufficient — no overwrite semantics needed.
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mv(src: Path, dst: Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"compactDistinctDir: rename $src -> $dst failed")
-    val d = new Path(base, sub)
-    val tmp = new Path(base, s"$sub.compact.tmp")
-    val old = new Path(base, s"$sub.compact.old")
-    // entry-time recovery, same ladder as PostProcess.compactParquet
-    if (!fs.exists(d)) {
-      if (fs.exists(tmp)) mv(tmp, d)
-      else if (fs.exists(old)) mv(old, d)
-    }
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val cur = spark.read.parquet(readPath(d.toString))
+    val d = new org.apache.hadoop.fs.Path(dir, sub).toString
+    graft.StateDir.recover(spark, d)
+    val cur = spark.read.parquet(readPath(d))
     val before = cur.count()
-    val distinctRows = cur.dropDuplicates().coalesce(numFiles)
-    val target = if (writeSub.isEmpty) tmp else new Path(tmp, writeSub)
-    distinctRows.write.mode("overwrite").parquet(target.toString)
-    val after = spark.read.parquet(target.toString).count()
-    mv(d, old)
-    mv(tmp, d)
-    fs.delete(old, true)
+    val after = graft.StateDir.swapIn(spark, d) { tmp =>
+      val target = if (writeSub.isEmpty) tmp else s"$tmp/$writeSub"
+      cur.dropDuplicates().coalesce(numFiles).write.mode("overwrite").parquet(target)
+      spark.read.parquet(target).count()
+    }
     (before, after)
   }
 

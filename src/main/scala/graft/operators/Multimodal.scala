@@ -861,7 +861,7 @@ object Multimodal {
     */
   def compactMediaIndex(spark: SparkSession, dir: String,
                         numFiles: Int = 4): (Long, Long) =
-    // the ONE swap/recovery ladder (Dedup.compactDistinctDir), parameterized
+    // the shared distinct rewrite (Dedup.compactDistinctDir), parameterized
     // for this index's layout: read the base+batch subdirs via the glob,
     // fold the distinct rewrite into a single base/ subdir
     Dedup.compactDistinctDir(spark, dir, "sigs", numFiles,

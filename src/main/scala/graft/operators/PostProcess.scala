@@ -112,56 +112,25 @@ object PostProcess {
     * file appends its own parquet parts, and at 100 TB a scan over millions
     * of KB-sized files is seek-bound long before it is byte-bound. Rewrites
     * `dir` into ~`targetBytes`-sized files (one shuffle-free coalesce when
-    * shrinking), swapping the rewritten directory in place of the original.
+    * shrinking), swapped in place of the original by the crash-safe
+    * [[graft.StateDir.swapIn]] on the dir's own Hadoop filesystem.
     * Returns (files before, files after). Single-writer assumption: callers
     * serialize compaction against concurrent writers of the same dir.
     */
   def compactParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
                      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    // Hadoop FileSystem API (not java.nio) so a directory on HDFS/S3A
-    // compacts the same way a local one does (the Dedup.compactDedupIndex
-    // ladder). Every rename targets a non-existent destination — the ladder
-    // deletes first — so checked FileSystem.rename is sufficient; rename is
-    // atomic on HDFS and posix local FS (on S3A it degrades to copy+delete,
-    // the documented trade of every rename-based swap there).
-    val d = new HPath(dir)
+    val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new HPath(d.getParent, d.getName + ".compact.tmp")
-    val old = new HPath(d.getParent, d.getName + ".compact.old")
-    def mv(src: HPath, dst: HPath): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"compactParquet: rename $src -> $dst failed")
-    // Crash recovery before anything else. A previous run can die at any
-    // point of the swap below; every reachable state is repairable from the
-    // sibling dirs alone:
-    //  - live dir absent + tmp present: died between the two renames and
-    //    tmp holds the complete rewrite — finish the swap (roll forward).
-    //  - live dir absent + tmp absent + old present: only the pre-swap copy
-    //    survives — restore it (roll back).
-    //  - live dir present: any leftover tmp (partial rewrite) or old
-    //    (interrupted post-swap delete) is garbage — remove it.
-    if (!fs.exists(d)) {
-      if (fs.exists(tmp)) mv(tmp, d)
-      else if (fs.exists(old)) mv(old, d)
-    }
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    def listParquet(p: HPath): Array[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val parts = listParquet(d)
+    def listParquet(): Array[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    graft.StateDir.recover(spark, dir)
+    val parts = listParquet()
     val before = parts.length
     val totalBytes = parts.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (nOut >= before) return (before, before) // already at/under target
-    spark.read.parquet(dir).coalesce(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // rename-aside swap: the directory is absent only between two renames
-    // (a delete-then-move window would strand readers — and a crash there
-    // loses the live dir entirely; see recovery above)
-    mv(d, old)
-    mv(tmp, d)
-    fs.delete(old, true)
-    (before, listParquet(d).length)
+    graft.StateDir.swapIn(spark, dir)(tmp =>
+      spark.read.parquet(dir).coalesce(nOut).write.mode("overwrite").parquet(tmp))
+    (before, listParquet().length)
   }
 }

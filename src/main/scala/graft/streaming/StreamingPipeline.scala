@@ -4,7 +4,7 @@ import java.sql.Date
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.{Pipeline, SinkMode}
+import graft.{Pipeline, SinkMode, StateDir}
 import graft.operators.Layout
 
 /** One finalized user session (same shape/epoch-second semantics as the
@@ -70,7 +70,6 @@ object StreamingPipeline {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val files = batch.select(input_file_name().as("f")).distinct()
           .collect().map(_.getString(0)).toSeq
-        def basenames(ps: Seq[String]) = ps.map(p => p.substring(p.lastIndexOf('/') + 1))
         // the gate re-opens each file, which can THROW even though the
         // source already delivered rows (ACL flipped, truncated rewrite,
         // deletion race) — route those through the same system-failure
@@ -82,25 +81,14 @@ object StreamingPipeline {
         // whole rewrite here would erase the retry rows of every OTHER
         // pending file (and with them the first-failure dates the horizon
         // runs on), silently losing consumed-but-excluded files.
-        val checks = files.map(f => f -> scala.util.Try(Pipeline.checkHeader(spark, f)))
-        val sysFailed = checks.collect { case (f, scala.util.Failure(e)) =>
-          (basenames(Seq(f)).head,
-            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-        }
-        val horizon = Pipeline.recordSystemFailures(spark, outDir, sysFailed, asOf,
-          horizonDays, partial = true)
-        val (good, bad) = checks
-          .collect { case (f, scala.util.Success(c)) => (f, c) }
-          .partition(_._2.ok)
-        Pipeline.quarantine(spark, outDir,
-          basenames(bad.map(_._1)) ++ horizon.expired, asOf, sink)
+        val (good, _) =
+          Pipeline.gateFiles(spark, outDir, files, asOf, sink, horizonDays, partial = true)
         if (good.nonEmpty) {
-          val goodFiles = good.map(_._1)
           val goodBatch =
-            if (goodFiles.size == files.size) batch
-            else batch.filter(input_file_name().isin(goodFiles: _*))
+            if (good.size == files.size) batch
+            else batch.filter(input_file_name().isin(good: _*))
           Pipeline.processBatch(spark, goodBatch, outDir, asOf,
-            expectedFiles = basenames(goodFiles), sink = sink)
+            expectedFiles = good.map(Pipeline.baseName), sink = sink)
         }
         ()
       }
@@ -124,8 +112,8 @@ object StreamingPipeline {
     *    drain — and quarantined 'Fallido' once it passes.
     *  - CONSUMED-BUT-EXCLUDED files: the in-batch gate hit a system
     *    failure after the source had already delivered the rows
-    *    ([[runAvailableNow]]'s Try ladder). The checkpoint will never
-    *    redeliver them, so a pending DATA file carrying an open
+    *    ([[Pipeline.gateFiles]] inside [[runAvailableNow]]). The checkpoint
+    *    will never redeliver them, so a pending DATA file carrying an open
     *    retry-ledger row is re-processed through the batch path here once
     *    it reads again.
     *
@@ -137,9 +125,9 @@ object StreamingPipeline {
                             outDir: String, asOf: Date,
                             sink: SinkMode = SinkMode.Parquet,
                             horizonDays: Int = 2): Unit = {
+    import Pipeline.baseName
     val done = Pipeline.processedFiles(spark, outDir, sink)
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val pending = Pipeline.listReports(spark, inputDir).filterNot(f => done(base(f)))
+    val pending = Pipeline.listReports(spark, inputDir).filterNot(f => done(baseName(f)))
     // BOTH opens (zero-row probe + header check) inside one Try: the file
     // can vanish/truncate/lose ACL between the two, and a throw from the
     // second open must route to the same system-failure horizon as the
@@ -147,46 +135,30 @@ object StreamingPipeline {
     // file's ledgering.
     val checks = pending.map(f => f -> scala.util.Try(
       (Pipeline.isHeaderOnly(spark, f), Pipeline.checkHeader(spark, f))))
-    val sysFailed = checks.collect { case (f, scala.util.Failure(e)) =>
-      (base(f), s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-    }
     // read the retry ledger BEFORE recordSystemFailures rewrites it: a
     // recovered file's row is pruned by the rewrite, and it is exactly the
     // signal that the file was consumed-and-excluded rather than fresh
-    val retryDir = java.nio.file.Paths.get(outDir, "reintentos")
+    val retryDir = s"$outDir/reintentos"
     val retryListed: Set[String] =
-      if (!java.nio.file.Files.exists(retryDir)) Set.empty
-      else spark.read.parquet(retryDir.toString)
+      if (!StateDir.exists(spark, retryDir)) Set.empty
+      else spark.read.parquet(retryDir)
         .select("nombreArchivo").collect().map(_.getString(0)).toSet
     val dataPending = checks.collect { case (f, scala.util.Success((false, hdr))) => (f, hdr) }
-    val (procGoodH, procBadH) = dataPending.filter { case (f, _) => retryListed(base(f)) }
+    val (procGoodH, procBadH) = dataPending.filter { case (f, _) => retryListed(baseName(f)) }
       .partition(_._2.ok)
     val (procGood, procBad) = (procGoodH.map(_._1), procBadH.map(_._1))
-    if (procGood.nonEmpty) {
-      val raw = spark.read
-        .option("header", "true")
-        .schema(Layout.rawSchema)
-        .csv(procGood: _*)
-        .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
-      Pipeline.processBatch(spark, raw, outDir, asOf,
-        expectedFiles = procGood.map(base), sink = sink)
-    }
-    val horizon = Pipeline.recordSystemFailures(spark, outDir, sysFailed, asOf, horizonDays)
+    if (procGood.nonEmpty)
+      Pipeline.processBatch(spark, Pipeline.readReports(spark, procGood), outDir, asOf,
+        expectedFiles = procGood.map(baseName), sink = sink)
+    val horizon = Pipeline.recordSystemFailures(spark, outDir,
+      Pipeline.systemFailures(checks), asOf, horizonDays)
     val headerOnly = checks.collect { case (f, scala.util.Success((true, hdr))) => (f, hdr) }
     val (okHeaderH, badHeaderH) = headerOnly.partition(_._2.ok)
     val (okHeader, badHeader) = (okHeaderH.map(_._1), badHeaderH.map(_._1))
     Pipeline.quarantine(spark, outDir,
-      badHeader.map(base) ++ procBad.map(base) ++ horizon.expired, asOf, sink)
-    Pipeline.ledgerRows(spark, outDir, okHeader.map(base), asOf, "Completado", sink)
+      badHeader.map(baseName) ++ procBad.map(baseName) ++ horizon.expired, asOf, sink)
+    Pipeline.ledgerRows(spark, outDir, okHeader.map(baseName), asOf, "Completado", sink)
   }
-
-  /** Round-12 name for the zero-row slice of [[reconcilePendingFiles]];
-    * kept as a forwarder so existing callers pick up the full ladder.
-    */
-  def reconcileZeroRowFiles(spark: SparkSession, inputDir: String,
-                            outDir: String, asOf: Date,
-                            sink: SinkMode = SinkMode.Parquet): Unit =
-    reconcilePendingFiles(spark, inputDir, outDir, asOf, sink)
 
   /** Streaming sessionization with CUSTOM state — the charter's
     * `flatMapGroupsWithState` surface (`session_window` covers the declarative
@@ -354,56 +326,17 @@ object StreamingPipeline {
                       checkpointDir: String, idCol: String = "doc_id",
                       textCol: String = "text",
                       threshold: Double = 0.5): StreamingQuery = {
-    // Per-batch parquet index reads are the DEFAULT — measured, not assumed
-    // (round-19 verdict item 6 hypothesized the bounded drain's 2.12×
-    // overhead was the per-batch index re-read and prescribed a drain-scoped
-    // cache; the round-20 same-session control FALSIFIED it: cached 60.8 s
-    // vs uncached 48.4 s on the identical ×10 drain — cache_effect 0.80×.
-    // A vectorized, column-pruned parquet scan beats row-format
-    // checkpointed-block unions, and the residual bounded-drain overhead
-    // (1.95× uncached) is per-batch fixed work — delta-side recompute,
-    // micro-batch planning — not index I/O. At 100 TB a session-pinned
-    // index is the wrong shape anyway: executor-side columnar reads are
-    // the scale path. ScaleProbe r20s records the experiment; the cache
-    // stays behind graft.gate.cache=on as its experimental arm.)
-    val spark = docs.sparkSession
-    val cache =
-      if (sys.props.getOrElse("graft.gate.cache", "off") == "on")
-        Some(new graft.operators.Dedup.DedupIndexCache(spark, indexDir))
-      else None
-    // close-on-start-failure (round-20 advice): the cache eagerly
-    // localCheckpoints the whole index at construction; if start() throws,
-    // no termination listener ever registers and the blocks would leak for
-    // the session — the exact class the close() path exists to prevent
-    val query = try {
-      docs.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          dedupGateBatch(batch, batchId, indexDir, outDir, idCol, textCol, threshold,
-            cache)
-        }
-        .start()
-    } catch {
-      case t: Throwable => cache.foreach(_.close()); throw t
-    }
-    // release the cache's blocks when THIS query terminates — an
-    // AvailableNow drain is bounded, but a caller that drains repeatedly
-    // (the daily gate) must not accumulate one cached index per drain
-    cache.foreach { c =>
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-          if (e.id == query.id) {
-            c.close()
-            spark.streams.removeListener(this)
-          }
+    // The gate re-reads the parquet index every micro-batch: a
+    // vectorized, column-pruned scan, and the only shape that survives
+    // 100 TB (a session-pinned index copy does not). A drain-scoped
+    // checkpointed copy of the index was measured slower (0.80x).
+    docs.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        dedupGateBatch(batch, batchId, indexDir, outDir, idCol, textCol, threshold)
       }
-      spark.streams.addListener(listener)
-    }
-    query
+      .start()
   }
 
   /** One idempotent micro-batch of the dedup gate. Replay protocol, in
@@ -426,8 +359,7 @@ object StreamingPipeline {
     */
   def dedupGateBatch(batch: DataFrame, batchId: Long, indexDir: String, outDir: String,
                      idCol: String = "doc_id", textCol: String = "text",
-                     threshold: Double = 0.5,
-                     cache: Option[graft.operators.Dedup.DedupIndexCache] = None): Unit = {
+                     threshold: Double = 0.5): Unit = {
     import graft.operators.Dedup
     val exactKeepers = Dedup.exactByFingerprint(batch, textCol, idCol).select(idCol)
     val selfExact = batch.join(exactKeepers, Seq(idCol), "left_semi")
@@ -435,19 +367,10 @@ object StreamingPipeline {
       .minhashLshPortable(selfExact, idCol, textCol, threshold = threshold)
       .select(col("b").as(idCol)).distinct()
     val selfDeduped = selfExact.join(nearSelfDrop, Seq(idCol), "left_anti")
-    // survivors feed two sinks (output + index append); compute once.
-    // With a drain-scoped cache the corpus side comes from checkpointed
-    // blocks instead of a per-batch parquet re-read — same gate arithmetic
-    // ([[graft.operators.Dedup.incrementalSurvivorsFrames]] is the shared
-    // core), same exclusion-based replay protocol.
-    val excl = Some(selfDeduped.select(idCol))
-    val survivors = cache.fold(
-      Dedup.incrementalSurvivorsIndexed(
-        indexDir, selfDeduped, idCol, textCol, threshold = threshold,
-        excludeIds = excl))(c =>
-      Dedup.incrementalSurvivorsFrames(
-        c.sets, c.bandSigs, c.fps, selfDeduped, idCol, textCol,
-        threshold = threshold, excludeIds = excl)).localCheckpoint()
+    // survivors feed two sinks (output + index append); compute once
+    val survivors = Dedup.incrementalSurvivorsIndexed(
+      indexDir, selfDeduped, idCol, textCol, threshold = threshold,
+      excludeIds = Some(selfDeduped.select(idCol))).localCheckpoint()
     survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_committed/batch-$batchId")
     val fs = marker.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
@@ -455,9 +378,6 @@ object StreamingPipeline {
       Dedup.appendToDedupIndex(survivors, idCol, textCol, indexDir)
       fs.mkdirs(marker)
     }
-    // mirror the append into the drain cache (duplicate admissions on a
-    // marker-skip replay are harmless — see DedupIndexCache's contract)
-    cache.foreach(_.admit(survivors, idCol, textCol))
     // release the per-batch snapshot: a long-lived stream otherwise pins
     // one checkpointed RDD per micro-batch (the Centrality/Bpe leak class)
     graft.operators.Checkpoints.drop(survivors)
@@ -814,132 +734,26 @@ object StreamingPipeline {
   }
 
   /** One idempotent CDC micro-batch (see [[cdcApplyStream]]). */
-  /** Versions (`v=N` dirs with N < batchId) present in `stateDir`.
-    * toLongOption: a stray non-numeric v=* entry must not throw here —
-    * same contract as the SCD marker GC (skip foreign artifacts, don't
-    * fail the micro-batch).
-    */
-  private def priorVersions(spark: SparkSession, stateDir: String,
-                            batchId: Long): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=") }
-      .flatMap(_.toLongOption)
-      .filter(_ < batchId)
-  }
-
   def cdcApplyBatch(batch: DataFrame, batchId: Long, stateDir: String,
                     key: String, attrs: Seq[String], opCol: String = "op",
                     tsCol: String = "ts", tieCol: String = "seq"): Unit = {
     import graft.operators.Cdc
     val spark = batch.sparkSession
-    val prior = priorVersions(spark, stateDir, batchId)
-    val base = prior.sorted.lastOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v")
+    val prior = StateDir.versions(spark, stateDir, below = batchId)
+    val base = prior.lastOption match {
+      case Some(v) => spark.read.parquet(StateDir.versionPath(stateDir, v))
       case None => batch.select((key +: attrs).map(col): _*).limit(0)
     }
     val next = Cdc.applyLog(base, batch, key, attrs, opCol, tsCol, tieCol)
-    next.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    publishVersion(spark, stateDir, batchId, prior)
+    next.write.mode("overwrite").parquet(StateDir.versionPath(stateDir, batchId))
+    StateDir.publish(spark, stateDir, batchId, prior)
   }
 
-  /** Publish `v=batchId` as `_CURRENT` (temp write + atomic rename) and GC
-    * all but the last two prior versions — the shared epilogue of every
-    * versioned-state stream sink ([[cdcApplyBatch]], [[countMinBatch]]).
+  /** Read the CDC state table an external reader would see: the version
+    * `_CURRENT` names ([[StateDir.read]]), None before the first publish.
     */
-  private def publishVersion(spark: SparkSession, stateDir: String,
-                             batchId: Long, prior: Seq[Long]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pointer swap for external readers (same temp+rename discipline as the
-    // batch pipeline's versioned visitantes); replays rewrite it identically.
-    // The swap must be a single overwrite-rename: delete-then-rename opens a
-    // window where cdcCurrentState sees NO pointer and returns None, so use
-    // FileContext.rename(OVERWRITE) — atomic on HDFS-like stores — and it
-    // throws (rather than returning false like FileSystem.rename) if the
-    // swap fails, so a broken pointer is loud, not silent.
-    val tmp = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT.tmp"))
-    val out = fs.create(tmp, true)
-    try out.write(s"v=$batchId".getBytes("UTF-8")) finally out.close()
-    val cur = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT"))
-    // Object stores without an AbstractFileSystem binding (e.g. s3a by
-    // default) can't serve FileContext; fall back to delete+rename with
-    // the rename CHECKED. The no-pointer window reopens there, but those
-    // stores' "atomic" rename is delete+copy anyway — cdcCurrentState
-    // re-probes once to absorb the window.
-    def fallbackSwap(): Unit = {
-      if (fs.exists(cur)) fs.delete(cur, false)
-      if (!fs.rename(tmp, cur))
-        throw new java.io.IOException(
-          s"publishVersion: pointer swap $tmp -> $cur failed")
-    }
-    if (supportsFileContext(cur.toUri, spark.sparkContext.hadoopConfiguration)) {
-      // The cached probe can go stale if a DIFFERENT Configuration (another
-      // session in this JVM) loses the AbstractFileSystem binding — keep the
-      // catch so a stale `true` degrades to the fallback instead of killing
-      // the micro-batch after its data write.
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          cur.toUri, spark.sparkContext.hadoopConfiguration)
-        fc.rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException => fallbackSwap()
-      }
-    } else fallbackSwap()
-    // retain two prior versions for readers mid-swap; GC the rest
-    prior.sorted.dropRight(2).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$v"), true)
-    }
-  }
-
-  /** Whether `uri`'s store serves FileContext (an AbstractFileSystem
-    * binding exists). Probed ONCE per (scheme, authority) and cached: the
-    * swap strategy is a property of the store, not of the batch, and a
-    * FileContext-less store (e.g. s3a by default) would otherwise pay a
-    * thrown UnsupportedFileSystemException on every pointer swap.
-    */
-  private val fileContextSupport =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private def supportsFileContext(uri: java.net.URI,
-      conf: org.apache.hadoop.conf.Configuration): Boolean =
-    fileContextSupport.computeIfAbsent(
-      s"${uri.getScheme}://${Option(uri.getAuthority).getOrElse("")}",
-      _ => try {
-        org.apache.hadoop.fs.FileContext.getFileContext(uri, conf); true
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException => false
-      })
-
-  /** Read the CDC state table an external reader would see (pointer). One
-    * bounded re-probe on a missing pointer: on stores where the swap
-    * degrades to delete+rename (no FileContext binding) a reader can land
-    * in the no-pointer window; a single 50 ms retry absorbs that case. The
-    * retry only fires when a version dir ALREADY exists (so a swap could
-    * genuinely be in flight) — a never-created state dir, or one polled
-    * between creation and its first data write, returns None immediately
-    * instead of paying a driver sleep per call.
-    */
-  def cdcCurrentState(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val cur = new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def anyVersionDir: Boolean = fs.exists(cur.getParent) &&
-      fs.listStatus(cur.getParent).exists(_.getPath.getName.startsWith("v="))
-    val present = fs.exists(cur) ||
-      (anyVersionDir && { Thread.sleep(50); fs.exists(cur) })
-    if (!present) None
-    else {
-      val in = fs.open(cur)
-      val v = try new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, "UTF-8")).readLine().trim
-      finally in.close()
-      Some(spark.read.parquet(s"$stateDir/$v"))
-    }
-  }
+  def cdcCurrentState(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    StateDir.read(spark, stateDir)
 
   /** Continuous Count-Min maintenance — the streaming twin of cm1: each
     * micro-batch's counters ([[graft.operators.Frequency.countMinCounters]])
@@ -968,16 +782,16 @@ object StreamingPipeline {
                     itemCol: String, depth: Int, width: Int): Unit = {
     import graft.operators.Frequency
     val spark = batch.sparkSession
-    val prior = priorVersions(spark, stateDir, batchId)
+    val prior = StateDir.versions(spark, stateDir, below = batchId)
     val delta = Frequency.countMinCounters(batch, col(itemCol), depth, width)
-    val next = prior.sorted.lastOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v")
+    val next = prior.lastOption match {
+      case Some(v) => spark.read.parquet(StateDir.versionPath(stateDir, v))
         .unionByName(delta)
         .groupBy("j", "idx").agg(sum(col("cnt")).as("cnt"))
       case None => delta
     }
-    next.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    publishVersion(spark, stateDir, batchId, prior)
+    next.write.mode("overwrite").parquet(StateDir.versionPath(stateDir, batchId))
+    StateDir.publish(spark, stateDir, batchId, prior)
   }
 
   /** Streaming PREFERENCE-STATE fold — the fine-tuning tier's member of
@@ -1013,15 +827,15 @@ object StreamingPipeline {
                           qFpCol: String): Unit = {
     import graft.operators.Preference
     val spark = batch.sparkSession
-    val prior = priorVersions(spark, stateDir, batchId)
+    val prior = StateDir.versions(spark, stateDir, below = batchId)
     val delta = Preference.preferenceState(batch, promptCol, idCol, qFpCol)
-    val next = prior.sorted.lastOption match {
+    val next = prior.lastOption match {
       case Some(v) => Preference.mergePreferenceState(
-        spark.read.parquet(s"$stateDir/v=$v"), delta)
+        spark.read.parquet(StateDir.versionPath(stateDir, v)), delta)
       case None => delta
     }
-    next.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    publishVersion(spark, stateDir, batchId, prior)
+    next.write.mode("overwrite").parquet(StateDir.versionPath(stateDir, batchId))
+    StateDir.publish(spark, stateDir, batchId, prior)
   }
 
   /** Live preference pairs from the last published state version (None

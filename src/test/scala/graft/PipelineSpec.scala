@@ -120,23 +120,46 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
       try {
         import scala.jdk.CollectionConverters._
         s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.matches("v\\d{6}")).toSeq.sorted
+          .filter(_.matches("v=\\d+")).toSeq.sortBy(_.stripPrefix("v=").toInt)
       } finally s.close()
     }
-    assert(versions() == Seq("v000001", "v000002")) // runs 1+2 (3-5 wrote no data)
-    // two more data batches with keepVersions = 1: old versions pruned,
-    // the pointer target survives, the table stays readable and correct
+    assert(versions() == Seq("v=1", "v=2")) // runs 1+2 (3-5 wrote no data)
+    // two more data batches: v=1 falls outside current + 2 prior and is
+    // pruned, the pointer target survives, the table stays readable and correct
     for ((name, day) <- Seq("report_e.txt" -> "2024-04-01", "report_f.txt" -> "2024-04-02")) {
       Files.write(inDir.resolve(name),
         (header + "\n" + s"eve@example.com,e,-,-,01/04/2024 09:00,,1,0,,0,0,-,-,-,-").getBytes)
-      Pipeline.runBatch(spark, inDir.toString, outDir.toString, Date.valueOf(day),
-        keepVersions = 1)
+      Pipeline.runBatch(spark, inDir.toString, outDir.toString, Date.valueOf(day))
     }
     val current = Files.readString(outDir.resolve("visitantes").resolve("_CURRENT")).trim
-    assert(versions() == Seq(current), s"versions=${versions()} current=$current")
+    assert(current == "v=4")
+    assert(versions() == Seq("v=2", "v=3", "v=4"), s"versions=${versions()}")
     val vis = Pipeline.currentVisitantes(spark, outDir.toString).get
     assert(vis.filter(col("email") === "eve@example.com").head().getInt(3) == 2)
     assert(vis.count() == 4) // alice, bob, dave, eve
+  }
+
+  test("a file: URI outDir keeps its ledger and pointer on that filesystem") {
+    // every state probe must go through the path's Hadoop filesystem: a
+    // java.nio probe treats "file:/..." as a RELATIVE path, misses the
+    // bitacora the Spark writes created, re-admits the ledgered file and
+    // double-counts visitantes, and drops a stray "file:" tree into the
+    // working directory
+    val in2 = Files.createTempDirectory("graft_uri_in")
+    val out2 = Files.createTempDirectory("graft_uri_out")
+    Files.write(in2.resolve("report_a.txt"), reportA.mkString("\n").getBytes)
+    val uri = out2.toUri.toString.stripSuffix("/")
+    assert(uri.startsWith("file:"))
+    val s1 = Pipeline.runBatch(spark, in2.toString, uri, Date.valueOf("2024-02-15"))
+    assert(s1 == Pipeline.RunSummary(1, 3, 2))
+    def alice() = Pipeline.currentVisitantes(spark, uri).get
+      .filter(col("email") === "alice@example.com").head().getAs[Int]("visitasTotales")
+    assert(alice() == 2)
+    val s2 = Pipeline.runBatch(spark, in2.toString, uri, Date.valueOf("2024-02-16"))
+    assert(s2 == Pipeline.RunSummary(0, 0, 0))
+    assert(spark.read.parquet(s"$uri/bitacora").count() == 1)
+    assert(alice() == 2)
+    assert(!Files.exists(java.nio.file.Paths.get(sys.props("user.dir"), "file:")))
   }
 
   test("scd history: closed extent byte-untouched across batches, versions correct") {

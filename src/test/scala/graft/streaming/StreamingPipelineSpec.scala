@@ -59,7 +59,7 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     val q = StreamingPipeline.runAvailableNow(
       spark, inDir.toString, outDir.toString, ckDir.toString, Date.valueOf("2024-04-01"))
     q.awaitTermination(120000)
-    StreamingPipeline.reconcileZeroRowFiles(
+    StreamingPipeline.reconcilePendingFiles(
       spark, inDir.toString, outDir.toString, Date.valueOf("2024-04-01"))
     val bit = spark.read.parquet(s"$outDir/bitacora")
       .filter(col("nombreArchivo").startsWith("report_empty"))
@@ -67,7 +67,7 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(bit == Map("report_empty_ok.txt" -> "Completado",
       "report_empty_bad.txt" -> "Fallido"))
     // idempotent: a second reconcile adds nothing
-    StreamingPipeline.reconcileZeroRowFiles(
+    StreamingPipeline.reconcilePendingFiles(
       spark, inDir.toString, outDir.toString, Date.valueOf("2024-04-01"))
     assert(spark.read.parquet(s"$outDir/bitacora")
       .filter(col("nombreArchivo").startsWith("report_empty")).count() == 2)
@@ -107,7 +107,7 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     val q3 = StreamingPipeline.runAvailableNow(spark, jIn.toString, jOut.toString,
       jCk.toString, Date.valueOf("2024-03-21"), sink = sink)
     q3.awaitTermination(120000)
-    StreamingPipeline.reconcileZeroRowFiles(spark, jIn.toString, jOut.toString,
+    StreamingPipeline.reconcilePendingFiles(spark, jIn.toString, jOut.toString,
       Date.valueOf("2024-03-21"), sink = sink)
     val led = spark.read.jdbc(sink.url, "bitacora", props)
       .filter(col("nombreArchivo") === "report_j_empty.txt").collect()
@@ -218,16 +218,6 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(oneShot == expected, s"one-shot drain admitted $oneShot")
     assert(boundedIdx == oneShotIdx,
       s"index diverged: bounded $boundedIdx rows vs one-shot $oneShotIdx")
-    // the drain-scoped index cache (graft.gate.cache=on — the measured-and-
-    // rejected experimental arm, see DedupIndexCache's scaladoc) must be
-    // answer-identical to the default per-batch columnar re-read
-    sys.props("graft.gate.cache") = "on"
-    val (cached, cachedIdx, cachedBatches) =
-      try drain(Some(1)) finally sys.props.remove("graft.gate.cache")
-    assert(cachedBatches == fileDocs.size)
-    assert(cached == expected, s"cached drain admitted $cached")
-    assert(cachedIdx == oneShotIdx,
-      s"cached index diverged: $cachedIdx rows vs one-shot $oneShotIdx")
   }
 
   test("dedup gate replay re-emits survivors instead of re-filtering (at-least-once safety)") {
